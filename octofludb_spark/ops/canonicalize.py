@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from octofludb_spark.functions.uri import DT_URI
 
 BROADCAST_LIMIT = 5_000_000  # dictionary rows safely broadcastable
+CANON_COLS = ["subject", "predicate", "object_lex", "object_dtype"]
 
 
 def canonical_map(components: DataFrame) -> DataFrame:
@@ -28,19 +29,47 @@ def canonical_map(components: DataFrame) -> DataFrame:
     )
 
 
+def alias_join(triples: DataFrame, mapping: DataFrame,
+               join=None) -> DataFrame:
+    """``triples`` plus ``_s_canon`` (the subject's canonical IRI) and
+    ``_o_canon`` (a URI object's canonical IRI), NULL where unmapped.
+    ``join(df, dim, key)`` left-joins one renamed side of the
+    dictionary; the default broadcasts it."""
+    join = join or (lambda df, dim, key:
+                    df.join(F.broadcast(dim), on=key, how="left"))
+    s_map = (mapping.withColumnRenamed("node", "subject")
+             .withColumnRenamed("canonical", "_s_canon"))
+    o_map = (mapping.withColumnRenamed("node", "object_lex")
+             .withColumnRenamed("canonical", "_o_canon"))
+    joined = join(join(triples, s_map, "subject"), o_map, "object_lex")
+    return joined.withColumn(
+        "_o_canon",
+        F.when(F.col("object_dtype") == DT_URI, F.col("_o_canon")),
+    )
+
+
+def canonical_rows(joined: DataFrame) -> DataFrame:
+    """The distinct canonical forms of ``alias_join``'s rows
+    (coalesce leaves unmapped ids as-is)."""
+    return joined.select(
+        F.coalesce("_s_canon", "subject").alias("subject"),
+        "predicate",
+        F.coalesce("_o_canon", "object_lex").alias("object_lex"),
+        "object_dtype",
+    ).dropDuplicates(CANON_COLS)
+
+
 def canonicalize(triples: DataFrame, mapping: DataFrame,
                  use_broadcast: bool = True,
-                 scalable_collide: bool = False,
                  auto_salt: bool = False) -> DataFrame:
     """Rewrite subject and URI-typed objects to canonical IRIs.
 
-    Scale design: only TOUCHED triples (those whose subject or URI
-    object appears in the alias dictionary) are rewritten and
-    deduplicated — the untouched majority of the store is passed
-    through with NO shuffle at all.  A rewritten triple may collide
-    with an untouched one, so the touched set (small) is also
-    anti-joined against the untouched side on the triple key; with the
-    dictionary broadcast both joins keep the big side map-side.
+    Exact set semantics at any alias density: every triple is rewritten
+    in ONE pass and deduplicated once — the single wide shuffle doubles
+    as the store's bucket-partitioning pass.  (A two-branch
+    untouched/touched union would scan and join the store twice for
+    the same result.)  With the dictionary broadcast both dictionary
+    joins keep the big side map-side.
 
     With ``use_broadcast=False`` (the dictionary outgrew
     BROADCAST_LIMIT) the two dictionary joins run as SALTED
@@ -58,69 +87,21 @@ def canonicalize(triples: DataFrame, mapping: DataFrame,
     wired into the treatment half.  A non-hub profile degrades to the
     plain repartition join (nsalt=1 would only add a constant salt
     column)."""
-    cols = ["subject", "predicate", "object_lex", "object_dtype"]
-    s_map = (mapping.withColumnRenamed("node", "subject")
-             .withColumnRenamed("canonical", "_s_canon"))
-    o_map = (mapping.withColumnRenamed("node", "object_lex")
-             .withColumnRenamed("canonical", "_o_canon"))
     if use_broadcast:
-        joined = (
-            triples.join(F.broadcast(s_map), on="subject", how="left")
-            .join(F.broadcast(o_map), on="object_lex", how="left")
-        )
+        return canonical_rows(alias_join(triples, mapping))
+    if auto_salt:
+        from octofludb_spark.ops.skew import salt_decision
+        nsalt = {k: salt_decision(triples, k)["nsalt"]
+                 for k in ("subject", "object_lex")}
+
+        def join(df, dim, key):
+            if nsalt[key] <= 1:
+                return df.join(dim, on=key, how="left")
+            return salted_join(df, dim, key, nsalt=nsalt[key], how="left")
     else:
-        if auto_salt:
-            from octofludb_spark.ops.skew import salt_decision
-            ns_s = salt_decision(triples, "subject")["nsalt"]
-            ns_o = salt_decision(triples, "object_lex")["nsalt"]
-            joined = triples.join(s_map, on="subject", how="left") \
-                if ns_s <= 1 else salted_join(triples, s_map, "subject",
-                                              nsalt=ns_s, how="left")
-            joined = joined.join(o_map, on="object_lex", how="left") \
-                if ns_o <= 1 else salted_join(joined, o_map, "object_lex",
-                                              nsalt=ns_o, how="left")
-        else:
-            joined = salted_join(
-                salted_join(triples, s_map, "subject", how="left"),
-                o_map, "object_lex", how="left",
-            )
-    joined = joined.withColumn(
-        "_o_canon",
-        F.when(F.col("object_dtype") == DT_URI, F.col("_o_canon")),
-    )
-    if scalable_collide and use_broadcast:
-        # when the TOUCHED subset is known-small (sparse aliasing):
-        # find collisions with a broadcast SEMI join (untouched never
-        # shuffles), then subtract them from the touched side.  With
-        # dense aliasing the broadcast outgrows its win — hence opt-in.
-        untouched = joined.where(
-            F.col("_s_canon").isNull() & F.col("_o_canon").isNull()
-        ).select(*cols)
-        touched = (
-            joined.where(F.col("_s_canon").isNotNull()
-                         | F.col("_o_canon").isNotNull())
-            .select(
-                F.coalesce("_s_canon", "subject").alias("subject"),
-                "predicate",
-                F.coalesce("_o_canon", "object_lex").alias("object_lex"),
-                "object_dtype",
-            )
-            .dropDuplicates(cols)
-        )
-        collide = untouched.join(F.broadcast(touched), on=cols, how="left_semi")
-        touched = touched.join(F.broadcast(collide), on=cols, how="left_anti")
-        return untouched.unionByName(touched)
-    # exact set semantics at any alias density: rewrite in ONE pass
-    # (coalesce leaves unmapped ids as-is) and dedup once — the single
-    # wide shuffle doubles as the store's bucket-partitioning pass.
-    # (A two-branch untouched/touched union would scan and join the
-    # store twice for the same result.)
-    return joined.select(
-        F.coalesce("_s_canon", "subject").alias("subject"),
-        "predicate",
-        F.coalesce("_o_canon", "object_lex").alias("object_lex"),
-        "object_dtype",
-    ).dropDuplicates(cols)
+        def join(df, dim, key):
+            return salted_join(df, dim, key, how="left")
+    return canonical_rows(alias_join(triples, mapping, join))
 
 
 def salted_join(big: DataFrame, dim: DataFrame, key: str, nsalt: int = 16,

@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from octofludb_spark.ops.canonicalize import canonical_map
+from octofludb_spark.ops.canonicalize import (CANON_COLS, alias_join,
+                                              canonical_map, canonical_rows)
 from octofludb_spark.ops.cc import connected_components
 
 
@@ -108,30 +109,9 @@ def rewrite_through(canonical: DataFrame,
     Both sides come from ONE map-side pass over ``canonical`` with the
     broadcast delta dictionary; the untouched majority of the store is
     never shuffled, never rewritten, never even returned."""
-    from octofludb_spark.functions.uri import DT_URI
-
-    s_map = (sub_map.withColumnRenamed("node", "subject")
-             .withColumnRenamed("canonical", "_s_canon"))
-    o_map = (sub_map.withColumnRenamed("node", "object_lex")
-             .withColumnRenamed("canonical", "_o_canon"))
-    joined = (
-        canonical.join(F.broadcast(s_map), on="subject", how="left")
-        .join(F.broadcast(o_map), on="object_lex", how="left")
-        .withColumn("_o_canon",
-                    F.when(F.col("object_dtype") == DT_URI,
-                           F.col("_o_canon")))
-    )
-    touched = joined.where(F.col("_s_canon").isNotNull()
-                           | F.col("_o_canon").isNotNull())
-    cols = ["subject", "predicate", "object_lex", "object_dtype"]
-    doomed = touched.select(*cols)
-    rewritten = touched.select(
-        F.coalesce("_s_canon", "subject").alias("subject"),
-        "predicate",
-        F.coalesce("_o_canon", "object_lex").alias("object_lex"),
-        "object_dtype",
-    ).dropDuplicates(cols)
-    return doomed, rewritten
+    touched = alias_join(canonical, sub_map).where(
+        F.col("_s_canon").isNotNull() | F.col("_o_canon").isNotNull())
+    return touched.select(*CANON_COLS), canonical_rows(touched)
 
 
 def sync_canonical(spark, store, batch: DataFrame,

@@ -1,7 +1,10 @@
 """SparkSession factory tuned for the KG-construction workload.
 
-Defaults target the sandbox (local[N], 32 cores); the same settings
-scale to a real cluster because nothing here assumes locality:
+Defaults: local[N] over the process's CPU affinity
+(``SPARK_GRAFT_CPUS`` overrides) and a 16g driver heap
+(``SPARK_DRIVER_MEM`` overrides; set it below the machine's memory on
+a box with 16 GB or less).  The same settings scale to a real cluster
+because nothing here assumes locality:
 AQE handles runtime re-planning and skew joins, shuffle partitions are
 sized for the parallelism, and Arrow powers every pandas UDF exchange.
 """
@@ -19,7 +22,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", 0)) \
+        or len(os.sched_getaffinity(0))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # local-mode shuffle writes from many task threads thrash a slow
     # /tmp; keep shuffle spill on tmpfs when available (a real cluster

@@ -1,26 +1,46 @@
 """Manifest-swap parquet triple store — Iceberg-shaped semantics
-without the Iceberg runtime (this sandbox has no Iceberg jar or
-network; SURVEY.md §7.0).
+without the Iceberg runtime (no Iceberg jar is assumed; SURVEY.md §7.0).
 
-Guarantees, matching what the pipeline needs from Iceberg:
-  * atomic commit: data lands in an unreferenced snapshot directory
-    first; the commit is a single atomic ``os.replace`` of
-    ``manifest.json`` pointing at it.
-  * snapshot isolation + resume: a killed job leaves the previous
-    manifest intact; restart re-reads the last committed snapshot and
-    re-runs only uncommitted stages (checkpoint-resumable stages,
-    north_rule).
-  * idempotent merge: append = union + dropDuplicates into a NEW
-    snapshot (reference semantics: uploading the same data twice adds
-    nothing, README.md:96).
-  * merge-on-read equality deletes: ``delete_rows_mor`` writes an
-    O(deletes) delete segment instead of rewriting the snapshot
-    (Iceberg v2 equality-delete files); ``read`` anti-joins the live
-    delete rows, ``compact`` folds them back into a clean snapshot.
-  * layout for pruning: data is hash-bucketed by subject
-    (``part_bucket = pmod(xxhash64(subject), n_buckets)``) and written
-    partitionBy(part_bucket), so point lookups and co-located
-    self-joins prune/skip shuffles.
+A table is a primary snapshot plus appended data segments and
+equality-delete segments, all listed in ``manifest.json``.  Every
+mutation (``write``, ``merge_rows``, ``append_rows``,
+``delete_rows_mor``, ``patch_rows_mor``) runs one protocol and differs
+only in the rows it hands over — step 1 is ``_write_segment``, steps
+2-5 are ``_edit``:
+
+  1. segment: the rows land in a fresh ``snap-*`` directory no manifest
+     lists yet.  NULL ``object_dtype`` is written as '' (the emit
+     convention; a NULL would never equal '' in a presence join and
+     would re-append on every merge).  Every segment of a
+     subject-bucketed table that carries ``subject`` — data and
+     equality deletes alike — is written partitionBy(part_bucket), with
+     ``part_bucket = pmod(xxhash64(subject), n_buckets)`` and rows
+     sorted by (part_bucket, predicate, subject), so point lookups and
+     co-located self-joins prune by directory and predicate scans skip
+     row groups.
+  2. delete: an equality-delete segment is listed with ``n_segs``, the
+     number of data segments listed before it (Iceberg sequence
+     numbers).  It applies to the primary and those segments only, so
+     a row appended later — even by the same commit — survives it.
+     ``read`` matches a delete's ``part_bucket`` by plain equality, so
+     a bucket filter on the data prunes the delete scan too.
+  3. promote-or-append: a full snapshot replaces the primary and drops
+     the table's segments and deletes; otherwise the first rows of a
+     table become its primary and later rows append to its segments.
+  4. stage marker: an optional ``stage`` joins ``committed_stages``, so
+     a restarted job re-runs only uncommitted stages.
+  5. CAS commit (``_commit``): the manifest is first written as an
+     immutable ``metadata/vN.json``, then ``manifest.json`` swaps
+     atomically (``os.replace``).  A commit computed against a stale
+     seq raises StoreCommitConflict; a killed job leaves the previous
+     manifest intact.
+
+``read`` folds the primary, segments and deletes in commit order
+(merge-on-read); ``compact`` rewrites them into one clean snapshot;
+``as_of`` reads, ``read_changes`` and ``read_changelog`` walk the
+retained metadata log.  Stores whose appended segments carry
+``part_bucket`` as a plain data column still read: ``unionByName``
+lines it up with the partition column.
 
 Swapping this for a real Iceberg catalog is a config change: the
 writer/reader interface takes DataFrames and table names only.
@@ -28,17 +48,37 @@ writer/reader interface takes DataFrames and table names only.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import time
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 TRIPLE_KEY = ["subject", "predicate", "object_lex", "object_dtype"]
+
+
+def _nsafe_join(left: DataFrame, right: DataFrame, how: str,
+                key: list[str] = TRIPLE_KEY) -> DataFrame:
+    """Broadcast-``right`` join on ``key`` with null-safe equality
+    (``<=>`` is still a hash-join key): a NULL in any key column must
+    not elude a presence check or a delete.  ``part_bucket`` is never
+    NULL and joins by plain equality, so a bucket filter on ``left``
+    is inferred onto ``right`` and prunes its partition directories."""
+    a, b = left.alias("a"), right.alias("b")
+    return a.join(F.broadcast(b), [
+        a[k] == b[k] if k == "part_bucket" else a[k].eqNullSafe(b[k])
+        for k in key], how)
+
+
+def _load(path: str) -> dict:
+    with open(path) as f:
+        return json.load(f)
 
 
 class StoreCommitConflict(RuntimeError):
@@ -70,8 +110,7 @@ class TripleStore:
         p = self._manifest_path()
         if not os.path.exists(p):
             return {"tables": {}, "committed_stages": [], "seq": 0}
-        with open(p) as f:
-            return json.load(f)
+        return _load(p)
 
     def _commit(self, m: dict) -> None:
         # Optimistic CAS (Iceberg catalog commit): `m` still carries
@@ -114,29 +153,27 @@ class TripleStore:
         if not os.path.exists(p):
             raise ValueError(
                 f"no manifest version {seq} (expired or never committed)")
-        with open(p) as f:
-            return json.load(f)
+        return _load(p)
+
+    def _versions(self) -> list[str]:
+        """Paths of the retained ``metadata/vN.json`` files, oldest
+        first."""
+        meta_dir = os.path.join(self.root, "metadata")
+        if not os.path.isdir(meta_dir):
+            return []
+        return [os.path.join(meta_dir, n) for n in sorted(os.listdir(meta_dir))
+                if n.startswith("v") and n.endswith(".json")]
 
     def history(self) -> list[dict]:
         """Commit log, oldest first: one row per retained manifest
         version with seq / committed_at / committed_stages / tables
         (Iceberg's snapshot-history metadata table)."""
-        meta_dir = os.path.join(self.root, "metadata")
-        if not os.path.isdir(meta_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(meta_dir)):
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            with open(os.path.join(meta_dir, name)) as f:
-                m = json.load(f)
-            out.append({
-                "seq": m.get("seq"),
-                "committed_at": m.get("committed_at"),
-                "committed_stages": list(m.get("committed_stages", [])),
-                "tables": sorted(m.get("tables", {})),
-            })
-        return out
+        return [{
+            "seq": m.get("seq"),
+            "committed_at": m.get("committed_at"),
+            "committed_stages": list(m.get("committed_stages", [])),
+            "tables": sorted(m.get("tables", {})),
+        } for m in map(_load, self._versions())]
 
     def init(self) -> dict:
         """Commit an empty manifest if none exists (the reference's
@@ -149,197 +186,179 @@ class TripleStore:
     def stage_done(self, stage: str) -> bool:
         return stage in self.manifest().get("committed_stages", [])
 
-    # ---- tables -----------------------------------------------------------
+    # ---- the mutation protocol: one layout writer, one manifest edit -------
 
     def _snap_dir(self, table: str) -> str:
         snap = f"snap-{uuid.uuid4().hex}"
         return os.path.join(self.root, "data", table, snap)
 
-    def write(self, df: DataFrame, table: str, stage: str | None = None,
-              bucket_by_subject: bool = False,
-              files_per_bucket: int | None = None) -> str:
-        """Write df as a NEW snapshot of `table`, then commit.
+    def _bucket(self, subject) -> Column:
+        """The bucket of ``subject`` (a column name or a Column)."""
+        return F.pmod(F.xxhash64(subject), F.lit(self.n_buckets))
 
-        files_per_bucket splits each bucket partition across ~that many
-        shuffle keys (compaction's file-count control): each
-        (bucket, slot) combo hashes wholly into one task, so a bucket
-        directory receives at most files_per_bucket files.  The slot is
-        salted over the WHOLE triple, not just the subject, so a hub
-        entity's triples (north_star: H1N1-style hot subjects) spread
-        across all slots instead of re-concentrating in one task."""
+    def _bucketed(self, table: str) -> bool:
+        """Whether ``table``'s primary snapshot is subject-bucketed,
+        read off its partition directories (no Spark job)."""
+        primary = self.manifest()["tables"].get(table)
+        return bool(primary) and os.path.isdir(primary) and any(
+            n.startswith("part_bucket=") for n in os.listdir(primary))
+
+    @staticmethod
+    def _normalized(df: DataFrame) -> DataFrame:
+        """NULL ``object_dtype`` -> '' (protocol step 1)."""
+        if "object_dtype" not in df.columns:
+            return df
+        return df.withColumn("object_dtype",
+                             F.coalesce("object_dtype", F.lit("")))
+
+    @classmethod
+    def _triple_rows(cls, df: DataFrame) -> DataFrame:
+        """Distinct normalized triples of ``df``: normalized BEFORE the
+        presence joins, which would never match a NULL dtype."""
+        return cls._normalized(df.select(*TRIPLE_KEY)) \
+            .dropDuplicates(TRIPLE_KEY)
+
+    @staticmethod
+    def _delete_keys(rows: DataFrame) -> DataFrame:
+        """Equality-delete rows carry their own equality ids: the
+        triple-key columns of ``rows``, else all of its columns (e.g. a
+        report table keyed by Barcode)."""
+        key = [c for c in TRIPLE_KEY if c in rows.columns] \
+            or list(rows.columns)
+        return rows.select(*key).dropDuplicates()
+
+    def _write_segment(self, df: DataFrame, table: str,
+                       bucketed: bool = False,
+                       files_per_bucket: int | None = None) -> str:
+        """Protocol step 1: write ``df`` into a fresh, not yet listed
+        snapshot directory of ``table`` and return its path."""
         path = self._snap_dir(table)
-        writer = df
-        if "object_dtype" in df.columns:
-            # Store invariant: dtype is NEVER NULL on disk ('' = plain
-            # literal, the emit convention).  A NULL would compare
-            # unequal to '' in the merge presence join and re-append on
-            # every merge.
-            writer = writer.withColumn(
-                "object_dtype", F.coalesce("object_dtype", F.lit("")))
-        if bucket_by_subject and "subject" in df.columns:
-            writer = writer.withColumn(
-                "part_bucket",
-                F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)),
-            )
-            if files_per_bucket and files_per_bucket > 1:
-                writer = (
-                    writer.withColumn(
-                        "file_slot",
-                        F.pmod(F.xxhash64(*[c for c in df.columns
-                                            if c != "part_bucket"]),
-                               F.lit(files_per_bucket)),
-                    )
-                    .repartition("part_bucket", "file_slot")
-                    .drop("file_slot")
-                )
-            else:
-                writer = writer.repartition("part_bucket")
-            # Sort each task's rows by (predicate, subject) before the
-            # parquet write: predicate runs give every row group a
-            # tight min/max predicate stat, so the dominant access
-            # pattern (GraphViews predicate scans, PushedFilters
-            # EqualTo(predicate)) SKIPS the row groups of every other
-            # predicate instead of decoding them.  Map-side only — no
-            # extra shuffle.
-            writer = writer.sortWithinPartitions(
-                "part_bucket", "predicate", "subject") \
-                if "predicate" in df.columns else writer
-            writer.write.mode("overwrite").partitionBy("part_bucket").parquet(path)
+        df = self._normalized(df)
+        if not (bucketed and "subject" in df.columns):
+            df.write.mode("overwrite").parquet(path)
+            return path
+        df = df.withColumn("part_bucket", self._bucket("subject"))
+        if files_per_bucket and files_per_bucket > 1:
+            # each (bucket, slot) hashes wholly into one task, so a
+            # bucket directory receives at most files_per_bucket files;
+            # the slot is salted over the WHOLE row so a hub subject's
+            # rows spread across every slot
+            slot = F.pmod(F.xxhash64(*[c for c in df.columns
+                                       if c != "part_bucket"]),
+                          F.lit(files_per_bucket))
+            df = (df.withColumn("file_slot", slot)
+                  .repartition("part_bucket", "file_slot").drop("file_slot"))
         else:
-            writer.write.mode("overwrite").parquet(path)
+            df = df.repartition("part_bucket")
+        if "predicate" in df.columns:
+            # map-side sort, no extra shuffle: predicate runs give every
+            # row group a tight min/max predicate stat, so predicate
+            # scans (PushedFilters EqualTo(predicate)) skip the row
+            # groups of every other predicate
+            df = df.sortWithinPartitions("part_bucket", "predicate",
+                                         "subject")
+        df.write.mode("overwrite").partitionBy("part_bucket").parquet(path)
+        return path
+
+    def _edit(self, table: str, stage: str | None = None, *,
+              snapshot: str | None = None, segment: str | None = None,
+              delete: str | None = None) -> dict:
+        """Protocol steps 2-5 on one manifest read: list ``delete``,
+        install ``snapshot`` or promote-or-append ``segment``, mark
+        ``stage``, CAS commit.  Returns the committed manifest."""
         m = self.manifest()
-        m["tables"][table] = path
-        # a full snapshot supersedes every appended segment and every
-        # pending equality delete
-        m.get("segments", {}).pop(table, None)
-        m.get("deletes", {}).pop(table, None)
+        if delete:
+            m.setdefault("deletes", {}).setdefault(table, []).append({
+                "path": delete,
+                "n_segs": len(m.get("segments", {}).get(table, [])),
+            })
+        if snapshot:
+            m["tables"][table] = snapshot
+            m.get("segments", {}).pop(table, None)
+            m.get("deletes", {}).pop(table, None)
+        elif segment:
+            if table in m["tables"] or m.get("segments", {}).get(table):
+                m.setdefault("segments", {}).setdefault(table, []).append(
+                    segment)
+            else:
+                m["tables"][table] = segment
         if stage and stage not in m.setdefault("committed_stages", []):
             m["committed_stages"].append(stage)
         self._commit(m)
+        return m
+
+    # ---- mutations --------------------------------------------------------
+
+    def write(self, df: DataFrame, table: str, stage: str | None = None,
+              bucket_by_subject: bool = False,
+              files_per_bucket: int | None = None) -> str:
+        """Write df as a NEW full snapshot of `table`, then commit.
+
+        ``bucket_by_subject`` lays it out by subject bucket;
+        ``files_per_bucket`` caps the files in each bucket directory
+        (compaction's file-count control)."""
+        path = self._write_segment(df, table, bucket_by_subject,
+                                   files_per_bucket)
+        self._edit(table, stage, snapshot=path)
         return path
 
     def merge_triples(self, spark: SparkSession, df: DataFrame,
                       table: str = "triples", stage: str | None = None) -> str:
-        """Idempotent merge, Iceberg-append style: only the rows NOT
-        already present are written, as a NEW data segment listed in
-        the manifest — the existing store is never rewritten, so a
-        merge costs O(batch), not O(store).  The existence check
-        prunes the scan to the batch's subject buckets and runs as a
-        broadcast semi-join (one map-side pass, no shuffle of the
-        store).  A merge into the live ``triples`` table also keeps
-        ``triples_canonical`` in sync: the batch is rewritten through
-        the precomputed alias map and appended there — post-build
-        merges (enrichment rounds, ``merge``/``fetch tag`` CLI) stay
-        visible to queries, which read the canonical view (the
-        reference has one graph).  ``compact`` folds accreted
-        segments back into one snapshot."""
-        # Normalize NULL dtype to '' (the emit convention) BEFORE the
-        # presence joins: SQL null never equals null, so a NULL-dtype
-        # triple would elude the semi/anti-join and re-append on every
-        # merge — silent duplication under an idempotent contract.
-        incoming = (
-            df.select(*TRIPLE_KEY)
-            .withColumn("object_dtype", F.coalesce("object_dtype", F.lit("")))
-            .dropDuplicates(TRIPLE_KEY)
-        )
-        out = self.merge_rows(spark, incoming, table, stage=stage)
+        """Idempotent merge (``merge_rows``).  A merge into the live
+        ``triples`` table also keeps ``triples_canonical`` in sync: the
+        batch is rewritten through the precomputed alias map and
+        appended there — post-build merges (enrichment rounds,
+        ``merge``/``fetch tag`` CLI) stay visible to queries, which
+        read the canonical view (the reference has one graph)."""
+        out = self.merge_rows(spark, df, table, stage=stage)
         if table == "triples":
             # Keep the canonical view in sync — including INCREMENTAL
             # entity linking when the batch carries new owl:sameAs
             # edges into a built store (GraphDB re-infers sameAs on
-            # every upload, octofludb-config.ttl:29; before this the
-            # new links were appended but never merged components).
-            # Upload-only stores (no build yet) mirror verbatim; a
-            # later build_graph links globally.
+            # every upload, octofludb-config.ttl:29).  Upload-only
+            # stores (no build yet) mirror verbatim; a later
+            # build_graph links globally.
             from octofludb_spark.ops.incremental import sync_canonical
 
-            sync_canonical(spark, self, incoming)
+            sync_canonical(spark, self, self._triple_rows(df))
         return out
 
     def merge_rows(self, spark: SparkSession, df: DataFrame, table: str,
                    stage: str | None = None) -> str:
         """Idempotent presence-checked append of triple rows into any
-        triple-shaped table — ``merge_triples`` minus the canonical
-        mirroring (the incremental build syncs the canonical view
-        itself, with the UPDATED alias map)."""
-        incoming = (
-            df.select(*TRIPLE_KEY)
-            .withColumn("object_dtype", F.coalesce("object_dtype", F.lit("")))
-            .dropDuplicates(TRIPLE_KEY)
-        )
+        triple-shaped table: only the rows NOT already present are
+        written, as a new data segment, so a merge costs O(batch), not
+        O(store).  The presence check prunes the store scan to the
+        batch's subject buckets and broadcasts the batch (no shuffle of
+        the store).  No canonical mirroring (``merge_triples`` adds it;
+        the incremental build syncs the canonical view itself, with the
+        UPDATED alias map)."""
+        incoming = self._triple_rows(df)
         current = self.read(spark, table)
         if current is None:
             return self.write(incoming, table, stage=stage,
                               bucket_by_subject=True)
-        return self._append_segment(spark, incoming, current, table,
-                                    stage=stage)
-
-    def _append_segment(self, spark: SparkSession, incoming: DataFrame,
-                        current: DataFrame, table: str,
-                        stage: str | None = None) -> str:
-        """Write ``incoming``'s not-yet-present rows as an appended
-        data segment and commit it to the manifest's segment list."""
-        # Pin the O(batch) incoming rows once: callers hand in plans
-        # that are expensive to re-evaluate (canonicalize + rewritten
-        # unions over merge-on-read reads), and this method otherwise
-        # evaluates `incoming` three times — the bucket collect, the
-        # presence semi-join's broadcast side, and the anti-join.
+        bucketed = "part_bucket" in current.columns
+        # Pin the O(batch) rows once: callers hand in plans that are
+        # expensive to re-evaluate (canonicalize + rewritten unions over
+        # merge-on-read reads), used by the bucket collect and both
+        # presence joins.
         incoming = incoming.persist()
         try:
-            return self._append_segment_pinned(spark, incoming, current,
-                                               table, stage=stage)
+            if bucketed:
+                buckets = [int(r[0]) for r in incoming.select(
+                    self._bucket("subject")).distinct().collect()]
+                current = current.where(F.col("part_bucket").isin(buckets))
+            existing = _nsafe_join(current, incoming, "left_semi") \
+                .select(*TRIPLE_KEY)
+            new_rows = _nsafe_join(incoming, existing, "left_anti").persist()
+            seg = self._write_segment(new_rows, table, bucketed) \
+                if new_rows.count() else None
+            new_rows.unpersist()
         finally:
             incoming.unpersist()
-
-    def _append_segment_pinned(self, spark: SparkSession,
-                               incoming: DataFrame, current: DataFrame,
-                               table: str, stage: str | None = None) -> str:
-        bucketed = "part_bucket" in current.columns
-        if bucketed:
-            inc_b = incoming.withColumn(
-                "part_bucket",
-                F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)),
-            )
-            buckets = [int(r.part_bucket) for r in
-                       inc_b.select("part_bucket").distinct().collect()]
-            pruned = current.where(F.col("part_bucket").isin(buckets))
-        else:
-            inc_b = incoming
-            pruned = current
-        # Null-safe equi-joins (<=> is still a hash-join key for
-        # Catalyst): a NULL in any key column — e.g. a raw write() of
-        # NULL-dtype triples — must not elude the presence check, or
-        # every merge re-appends those rows forever.
-        def _nsafe(left, right):
-            return [left[k].eqNullSafe(right[k]) for k in TRIPLE_KEY]
-
-        inc_a = incoming.alias("inc")
-        cur_a = pruned.alias("cur")
-        existing = (cur_a.join(F.broadcast(inc_a), _nsafe(cur_a, inc_a),
-                               "left_semi").select(*TRIPLE_KEY))
-        ex_a = existing.alias("ex")
-        incb_a = inc_b.alias("incb")
-        new_rows = incb_a.join(F.broadcast(ex_a), _nsafe(incb_a, ex_a),
-                               "left_anti").persist()
-        seg_path = None
-        if new_rows.count():
-            seg_path = self._snap_dir(table)
-            if bucketed:
-                (new_rows.repartition("part_bucket")
-                 .sortWithinPartitions("part_bucket", "predicate",
-                                       "subject")
-                 .write.mode("overwrite").partitionBy("part_bucket")
-                 .parquet(seg_path))
-            else:
-                new_rows.write.mode("overwrite").parquet(seg_path)
-        new_rows.unpersist()
-        m = self.manifest()
-        if seg_path:
-            m.setdefault("segments", {}).setdefault(table, []).append(seg_path)
-        if stage and stage not in m.setdefault("committed_stages", []):
-            m["committed_stages"].append(stage)
-        self._commit(m)
-        return seg_path or m["tables"].get(table, "")
+        m = self._edit(table, stage, segment=seg)
+        return seg or m["tables"].get(table, "")
 
     def delete_where(self, spark: SparkSession, condition,
                      table: str = "triples", stage: str | None = None) -> str:
@@ -402,97 +421,39 @@ class TripleStore:
                         table: str = "triples",
                         stage: str | None = None) -> str | None:
         """Merge-on-read equality delete (Iceberg v2 delete files):
-        write the doomed rows as an O(deletes) delete segment and list
-        it in the manifest — the data snapshot is NOT rewritten.
-        ``read`` anti-joins live delete rows; ``compact`` folds them
-        into a clean snapshot.  This is the 100 TB path for the
+        write the doomed rows as an O(deletes) delete segment — the
+        data is NOT rewritten.  This is the 100 TB path for the
         incremental component-merge rewrite, where a batch touches a
         few thousand canonical triples of a petabyte store.
 
         Low-level: no canonical-view mirroring (callers updating the
         live ``triples`` table should use delete_rows / delete_where,
-        which keep both views in sync).
-
-        Equality key = the delete rows' own columns (Iceberg equality
-        delete files carry their equality_ids): triple-shaped rows key
-        on TRIPLE_KEY as before; a non-triple materialized table (e.g.
-        a report keyed by Barcode) deletes by whatever key columns the
-        caller passes."""
-        key = [c for c in TRIPLE_KEY if c in rows.columns] \
-            or list(rows.columns)
-        dels = rows.select(*key).dropDuplicates()
-        if "object_dtype" in dels.columns:
-            dels = dels.withColumn(
-                "object_dtype", F.coalesce("object_dtype", F.lit("")))
+        which keep both views in sync).  The equality key is described
+        at ``_delete_keys``."""
+        dels = self._delete_keys(rows)
         if dels.isEmpty():
-            if stage:
-                m = self.manifest()
-                if stage not in m.setdefault("committed_stages", []):
-                    m["committed_stages"].append(stage)
-                    self._commit(m)
+            if stage and not self.stage_done(stage):
+                self._edit(table, stage)
             return None
-        seg = self._snap_dir(table)
-        dels.write.mode("overwrite").parquet(seg)
-        m = self.manifest()
-        # Iceberg sequence-number semantics: the delete applies only to
-        # data committed BEFORE it (the current primary + the first
-        # n_segs segments).  A row re-appended later must NOT be eaten
-        # by an older delete.
-        m.setdefault("deletes", {}).setdefault(table, []).append({
-            "path": seg,
-            "n_segs": len(m.get("segments", {}).get(table, [])),
-        })
-        if stage and stage not in m.setdefault("committed_stages", []):
-            m["committed_stages"].append(stage)
-        self._commit(m)
+        seg = self._write_segment(dels, table, self._bucketed(table))
+        self._edit(table, stage, delete=seg)
         return seg
 
     def patch_rows_mor(self, spark: SparkSession, delete_keys: DataFrame,
                        new_rows: DataFrame, table: str,
                        stage: str | None = None) -> tuple[str | None, str]:
-        """Single-commit merge-on-read patch: an equality-delete
-        segment for ``delete_keys`` plus a data segment of
-        ``new_rows``, committed as ONE manifest swap — the Iceberg
-        single-transaction DELETE+APPEND an incremental report refresh
-        wants.  Two commits (delete then append) leave a window where
-        a reader sees the keys deleted but not yet replaced, and cost
-        two metadata versions per refresh; one commit is atomic and
-        halves the version-log churn.  Sequence semantics match the
-        two-call form: the delete's ``n_segs`` is recorded BEFORE the
-        new segment is listed, so the delete applies only to
-        pre-existing data and cannot eat the rows it replaces."""
-        key = [c for c in TRIPLE_KEY if c in delete_keys.columns] \
-            or list(delete_keys.columns)
-        dels = delete_keys.select(*key).dropDuplicates()
-        if "object_dtype" in dels.columns:
-            dels = dels.withColumn(
-                "object_dtype", F.coalesce("object_dtype", F.lit("")))
-        del_seg: str | None = self._snap_dir(table)
-        dels.write.mode("overwrite").parquet(del_seg)
-        primary = self.manifest()["tables"].get(table)
-        if (primary and "subject" in new_rows.columns
-                and "part_bucket" not in new_rows.columns):
-            pcols = new_rows.sparkSession.read.parquet(primary).columns
-            if "part_bucket" in pcols:
-                new_rows = new_rows.withColumn(
-                    "part_bucket",
-                    F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)))
-        data_seg = self._snap_dir(table)
-        new_rows.write.mode("overwrite").parquet(data_seg)
-        m = self.manifest()
-        m.setdefault("deletes", {}).setdefault(table, []).append({
-            "path": del_seg,
-            "n_segs": len(m.get("segments", {}).get(table, [])),
-        })
-        if table not in m["tables"] and not m.get(
-                "segments", {}).get(table):
-            m["tables"][table] = data_seg
-        else:
-            m.setdefault("segments", {}).setdefault(table, []).append(
-                data_seg)
-        if stage and stage not in m.setdefault("committed_stages", []):
-            m["committed_stages"].append(stage)
-        self._commit(m)
+        """Single-commit merge-on-read patch: an equality delete of
+        ``delete_keys`` plus a data segment of ``new_rows`` in ONE
+        manifest swap — the Iceberg single-transaction DELETE+APPEND an
+        incremental report refresh wants.  Two commits would leave a
+        window where a reader sees the keys deleted but not yet
+        replaced; the sequence rule keeps the delete off the rows it
+        replaces."""
+        bucketed = self._bucketed(table)
+        del_seg = self._write_segment(self._delete_keys(delete_keys), table,
+                                      bucketed)
+        data_seg = self._write_segment(new_rows, table, bucketed)
+        self._edit(table, stage, delete=del_seg, segment=data_seg)
         return del_seg, data_seg
 
     def append_rows(self, df: DataFrame, table: str,
@@ -500,32 +461,9 @@ class TripleStore:
         """Append rows as a new data segment with NO presence check —
         for run-keyed tables (lineage/metrics rows are per-batch facts,
         not set members; appending the same batch twice is a caller
-        bug, not a merge).  O(batch): the existing table is not read.
-
-        Writer consistency: appending to a subject-bucketed table
-        stamps the same pmod(xxhash64(subject)) bucket column the
-        primary snapshot carries, so readers can union and
-        bucket-prune uniformly (only the primary's parquet FOOTER is
-        touched — the data is not read)."""
-        primary = self.manifest()["tables"].get(table)
-        if (primary and "subject" in df.columns
-                and "part_bucket" not in df.columns):
-            pcols = df.sparkSession.read.parquet(primary).columns
-            if "part_bucket" in pcols:
-                df = df.withColumn(
-                    "part_bucket",
-                    F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)))
-        seg = self._snap_dir(table)
-        df.write.mode("overwrite").parquet(seg)
-        m = self.manifest()
-        if table not in m["tables"] and not m.get(
-                "segments", {}).get(table):
-            m["tables"][table] = seg
-        else:
-            m.setdefault("segments", {}).setdefault(table, []).append(seg)
-        if stage and stage not in m.setdefault("committed_stages", []):
-            m["committed_stages"].append(stage)
-        self._commit(m)
+        bug, not a merge).  O(batch): the existing table is not read."""
+        seg = self._write_segment(df, table, self._bucketed(table))
+        self._edit(table, stage, segment=seg)
         return seg
 
     def read(self, spark: SparkSession, table: str = "triples",
@@ -558,10 +496,7 @@ class TripleStore:
                 raise ValueError(
                     f"delete segment {dpath} shares no columns with "
                     f"table data")
-            d_a, t_a = ddf.alias("d"), df.alias("t")
-            return t_a.join(F.broadcast(d_a),
-                           [t_a[k].eqNullSafe(d_a[k]) for k in key],
-                           "left_anti")
+            return _nsafe_join(df, ddf, "left_anti", key)
 
         # Fold data segments and delete segments in commit order
         # (per-root reads: partition discovery is per-snapshot).  Each
@@ -581,23 +516,18 @@ class TripleStore:
 
     def read_subject(self, spark: SparkSession, subject: str,
                      table: str = "triples") -> DataFrame | None:
-        """Point lookup with PARTITION PRUNING: the subject's bucket is
-        computed driver-side with the same pmod(xxhash64(.)) the writer
-        used, and the part_bucket filter prunes the scan to 1/n_buckets
-        of the store — at 100 TB a subject lookup reads one partition
-        directory, not the table.  (`.explain` shows the pruned
-        PartitionFilters; tested structurally.)"""
+        """Point lookup with PARTITION PRUNING: the filter compares
+        part_bucket with the writer's own bucket expression over the
+        literal subject; Catalyst folds that to a constant, so the scan
+        prunes to one bucket directory (PartitionFilters in the plan)
+        and no Spark job runs before the action."""
         df = self.read(spark, table)
-        if df is None or "part_bucket" not in df.columns:
-            return None if df is None else df.where(F.col("subject") == subject)
-        bucket = (
-            spark.range(1)
-            .select(F.pmod(F.xxhash64(F.lit(subject)),
-                           F.lit(self.n_buckets)).alias("b"))
-            .first()["b"]
-        )
-        return df.where((F.col("part_bucket") == int(bucket))
-                        & (F.col("subject") == subject))
+        if df is None:
+            return None
+        hit = F.col("subject") == subject
+        if "part_bucket" in df.columns:
+            hit = (F.col("part_bucket") == self._bucket(F.lit(subject))) & hit
+        return df.where(hit)
 
     def compact(self, spark: SparkSession, table: str = "triples",
                 target_files: int = 1) -> str:
@@ -611,16 +541,33 @@ class TripleStore:
         current = self.read(spark, table)
         if current is None:
             raise ValueError(f"no such table {table}")
-        if "part_bucket" in current.columns:
-            out = current.drop("part_bucket")
-            bucketed = "subject" in out.columns
-        else:
-            out = current
-            bucketed = False
-        if bucketed:
+        out = current.drop("part_bucket")
+        if "part_bucket" in current.columns and "subject" in out.columns:
             return self.write(out, table, bucket_by_subject=True,
                               files_per_bucket=target_files)
         return self.write(out.coalesce(target_files), table)
+
+    def _log_since(self, table: str, since: int
+                   ) -> tuple[bool, list[str], list[str]] | None:
+        """Lineage of ``table`` from manifest seq ``since`` to now:
+        None when the table did not exist at ``since``, else
+        ``(intact, new segment paths, new delete paths)``.  ``intact``
+        means no snapshot rewrite in between: the primary is the same
+        and the old segment and delete lists are prefixes of the
+        current ones."""
+        def lists(m: dict):
+            return (m["tables"].get(table),
+                    list(m.get("segments", {}).get(table, [])),
+                    [d["path"] for d in m.get("deletes", {}).get(table, [])])
+
+        old_p, old_segs, old_dels = lists(
+            self._manifest_at(since) if since else {"tables": {}})
+        if old_p is None and not old_segs:
+            return None
+        cur_p, cur_segs, cur_dels = lists(self.manifest())
+        intact = (cur_p == old_p and cur_segs[:len(old_segs)] == old_segs
+                  and cur_dels[:len(old_dels)] == old_dels)
+        return intact, cur_segs[len(old_segs):], cur_dels[len(old_dels):]
 
     def read_changes(self, spark: SparkSession, table: str = "triples",
                      since: int = 0,
@@ -636,29 +583,14 @@ class TripleStore:
         silently returning a full-table diff would hide an O(store)
         anti-join behind an "incremental" name; pass
         allow_rewrite_diff=True to compute it explicitly."""
-        cur = self.manifest()
-        old = self._manifest_at(since) if since else {
-            "tables": {}, "segments": {}}
-        cur_primary = cur["tables"].get(table)
-        old_primary = old["tables"].get(table)
-        old_segs = list(old.get("segments", {}).get(table, []))
-        cur_segs = list(cur.get("segments", {}).get(table, []))
-        old_dels = list(old.get("deletes", {}).get(table, []))
-        cur_dels = list(cur.get("deletes", {}).get(table, []))
-        if old_primary is None and not old_segs:
+        log = self._log_since(table, since)
+        if log is None:
             # table did not exist at `since` — everything is new
             return self.read(spark, table)
-        if (cur_primary == old_primary
-                and cur_segs[:len(old_segs)] == old_segs
-                and cur_dels == old_dels):
-            new_paths = [p for p in cur_segs[len(old_segs):]
-                         if os.path.exists(p)]
-            if not new_paths:
-                return None
-            df = spark.read.parquet(new_paths[0])
-            for p in new_paths[1:]:
-                df = df.unionByName(spark.read.parquet(p))
-            return df
+        intact, segs, dels = log
+        if intact and not dels:
+            frames = [spark.read.parquet(p) for p in segs if os.path.exists(p)]
+            return reduce(DataFrame.unionByName, frames) if frames else None
         if not allow_rewrite_diff:
             raise ValueError(
                 f"table {table!r} was rewritten since seq {since} "
@@ -684,74 +616,41 @@ class TripleStore:
         break lineage (the delete files ARE the changelog); a snapshot
         REWRITE still raises, because a rewritten table has no
         row-level changelog to read."""
-        cur = self.manifest()
-        old = self._manifest_at(since) if since else {
-            "tables": {}, "segments": {}}
-        cur_primary = cur["tables"].get(table)
-        old_primary = old["tables"].get(table)
-        old_segs = list(old.get("segments", {}).get(table, []))
-        cur_segs = list(cur.get("segments", {}).get(table, []))
-        old_dels = [d["path"] for d in old.get("deletes", {})
-                    .get(table, [])]
-        cur_dels = [d["path"] for d in cur.get("deletes", {})
-                    .get(table, [])]
-        if old_primary is None and not old_segs:
+        log = self._log_since(table, since)
+        if log is None:
             df = self.read(spark, table)
             return None if df is None else df.withColumn(
                 "_change_type", F.lit("insert"))
-        if (cur_primary != old_primary
-                or cur_segs[:len(old_segs)] != old_segs
-                or cur_dels[:len(old_dels)] != old_dels):
+        intact, segs, dels = log
+        if not intact:
             raise ValueError(
                 f"table {table!r} was rewritten since seq {since} "
                 "(compact/overwrite) — no row-level changelog exists")
-        frames = []
-        for p in cur_segs[len(old_segs):]:
-            if os.path.exists(p):
-                frames.append(spark.read.parquet(p).withColumn(
-                    "_change_type", F.lit("insert")))
-        for p in cur_dels[len(old_dels):]:
-            if os.path.exists(p):
-                frames.append(spark.read.parquet(p).withColumn(
-                    "_change_type", F.lit("delete")))
+        frames = [spark.read.parquet(p).withColumn("_change_type", F.lit(kind))
+                  for kind, paths in (("insert", segs), ("delete", dels))
+                  for p in paths if os.path.exists(p)]
         if not frames:
             return None
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f, allowMissingColumns=True)
-        return out
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                      frames)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[int]:
         """Expire all but the newest `keep_last` manifest versions and
         delete data dirs no retained version references (Iceberg's
         expire_snapshots maintenance).  Returns the expired seqs.
         Time travel / read_changes to an expired seq then raises."""
-        meta_dir = os.path.join(self.root, "metadata")
-        if not os.path.isdir(meta_dir):
-            return []
-        versions = sorted(
-            n for n in os.listdir(meta_dir)
-            if n.startswith("v") and n.endswith(".json"))
+        versions = self._versions()
         expired = versions[:-keep_last] if keep_last > 0 else versions
-        out = []
-        for name in expired:
-            os.remove(os.path.join(meta_dir, name))
-            out.append(int(name[1:-5]))
+        for p in expired:
+            os.remove(p)
         self.vacuum()
-        return out
+        return [int(os.path.basename(p)[1:-5]) for p in expired]
 
     def _live_paths(self) -> set:
         """Every data path referenced by the CURRENT manifest or any
         retained metadata version (they back time travel)."""
         live = set()
-        manifests = [self.manifest()]
-        meta_dir = os.path.join(self.root, "metadata")
-        if os.path.isdir(meta_dir):
-            for name in os.listdir(meta_dir):
-                if name.startswith("v") and name.endswith(".json"):
-                    with open(os.path.join(meta_dir, name)) as f:
-                        manifests.append(json.load(f))
-        for m in manifests:
+        for m in [self.manifest(), *map(_load, self._versions())]:
             live.update(m.get("tables", {}).values())
             for segs in m.get("segments", {}).values():
                 live.update(segs)
@@ -765,12 +664,7 @@ class TripleStore:
         appended merge segments are live; retained versions keep their
         dirs alive for time travel until expire_snapshots)."""
         live = self._live_paths()
-        data = os.path.join(self.root, "data")
-        if not os.path.isdir(data):
-            return
-        for table in os.listdir(data):
-            tdir = os.path.join(data, table)
-            for snap in os.listdir(tdir):
-                p = os.path.join(tdir, snap)
-                if p not in live:
-                    shutil.rmtree(p, ignore_errors=True)
+        snaps = os.path.join(glob.escape(self.root), "data", "*", "*")
+        for p in glob.glob(snaps):
+            if p not in live:
+                shutil.rmtree(p, ignore_errors=True)

@@ -176,9 +176,10 @@ def test_gisaid_shapes(spark):
 
 
 def test_store_subject_lookup_prunes_partitions(spark, tmp_path):
-    """read_subject computes the subject's bucket driver-side and the
-    scan prunes to that partition directory (PartitionFilters in the
-    plan) — the point-lookup path for a 100 TB store."""
+    """read_subject filters on the writer's bucket expression over the
+    literal subject, which Catalyst folds to a constant, and the scan
+    prunes to that partition directory (PartitionFilters in the plan)
+    — the point-lookup path for a 100 TB store."""
     from octofludb_spark.sources.store import TripleStore
 
     store = TripleStore(str(tmp_path / "st"), n_buckets=8)
