@@ -55,14 +55,7 @@ def build_graph(
     if not store.stage_done("canon"):
         triples = store.read(spark, "triples")
         mapping = store.read(spark, "canonical_map")
-        # parquet row count is metadata-only — one cheap read decides
-        # broadcast vs salted-repartition dictionary joins
-        from octofludb_spark.ops.canonicalize import BROADCAST_LIMIT
-
-        canon = canonicalize(
-            triples, mapping.select("node", "canonical"),
-            use_broadcast=mapping.count() <= BROADCAST_LIMIT,
-        )
+        canon = canonicalize(triples, mapping.select("node", "canonical"))
         store.write(canon, "triples_canonical", stage="canon",
                     bucket_by_subject=True)
 

@@ -39,39 +39,41 @@ def _csv_set(x):
     return {s.strip() for s in x.split(",")}
 
 
+def _source_doc(kind: str, raw: bytes) -> tuple[str, str]:
+    """(lang, content) of a source file.  A binary GISAID sheet (OLE2
+    or ZIP magic; `prep gis gisaid.xls`, reference ui.py:657) rides as
+    base64 under lang gisaid_xls; text decodes leniently (never a
+    UnicodeDecodeError)."""
+    import base64
+
+    lang = _KIND_TO_LANG.get(kind, kind)
+    if lang == "gisaid" and (raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
+                             or raw[:2] == b"PK"):
+        return "gisaid_xls", base64.b64encode(raw).decode()
+    return lang, raw.decode("utf-8", "replace")
+
+
 def cmd_prep(args) -> int:
     import pandas as pd
 
-    from octofludb_spark.extract.recipes import (RECIPES, fasta_triples,
-                                                 table_triples,
-                                                 tag_node_triples)
+    from octofludb_spark.extract.recipes import file_triples, tag_node_triples
     from octofludb_spark.functions.uri import make_tag_uri
     from octofludb_spark.plans.turtle import triples_to_turtle
 
-    lang = _KIND_TO_LANG.get(args.kind, args.kind)
-    taguri = make_tag_uri(args.tag) if args.tag else None
-    raw = open(args.file, "rb").read()
-    if lang == "gisaid" and (raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-                             or raw[:2] == b"PK"):
-        # binary GISAID sheet (`prep gis gisaid.xls`, reference ui.py:657)
-        from octofludb_spark.extract.recipes import gisaid_triples_excel
-
-        trips = gisaid_triples_excel(raw, taguri=taguri)
-    elif lang in ("fasta", "tsv"):
+    lang, content = _source_doc(args.kind, open(args.file, "rb").read())
+    opts = {}
+    if lang in ("fasta", "tsv"):
         # the tablelike knobs (reference prep fasta/table options,
         # ui.py:812-931): --include/--exclude prune the classifier
         # chain, --levels filters emitted fields, --na lists NA cells
         from octofludb_spark.extract.infer import chain
 
         inc, exc = _csv_set(args.include), _csv_set(args.exclude)
-        classifiers = chain(inc, exc) if (inc or exc) else None
         na = tuple((args.na or "").split(",")) if args.na is not None else ()
-        fn = fasta_triples if lang == "fasta" else table_triples
-        trips = fn(raw.decode("utf-8", "replace"),
-                   levels=_csv_set(args.levels), na_str=na,
-                   taguri=taguri, classifiers=classifiers)
-    else:
-        trips = RECIPES[lang](raw.decode("utf-8", "replace"), taguri=taguri)
+        opts = dict(levels=_csv_set(args.levels), na_str=na,
+                    classifiers=chain(inc, exc) if (inc or exc) else None)
+    taguri = make_tag_uri(args.tag) if args.tag else None
+    trips = file_triples(lang, content, taguri=taguri, **opts)
     if args.tag:
         trips = pd.concat(
             [trips, tag_node_triples(args.tag, args.file, args.run_ts)],
@@ -132,19 +134,7 @@ def cmd_merge(args) -> int:
     from octofludb_spark.sources.store import TripleStore
 
     spark = _spark(args.cores)
-    raw = open(args.file, "rb").read()
-    lang = _KIND_TO_LANG.get(args.kind, args.kind)
-    # same binary sniff as cmd_prep: a GISAID Excel sheet routes to
-    # the xls-aware recipe lang; text decodes leniently (never a
-    # UnicodeDecodeError on a merge)
-    if lang == "gisaid" and (raw[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
-                             or raw[:2] == b"PK"):
-        import base64
-
-        lang = "gisaid_xls"  # binary sheet rides the corpus as base64
-        content = base64.b64encode(raw).decode()
-    else:
-        content = raw.decode("utf-8", "replace")
+    lang, content = _source_doc(args.kind, open(args.file, "rb").read())
     row = pd.DataFrame([{
         "repo": "local", "path": args.file, "commit": "0" * 40,
         "lang": lang, "content": content,

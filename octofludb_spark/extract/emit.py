@@ -107,7 +107,7 @@ class TripleSink:
 
     With ``src`` (an int array aligned to the table's rows), every
     emitted triple carries the source-file index of the row it came
-    from — per-row lineage for the batched extraction path."""
+    from — per-row lineage for the recipes (extract/recipes.py)."""
 
     def __init__(self, src: Optional[np.ndarray] = None) -> None:
         self._blocks: list[tuple] = []

@@ -20,12 +20,8 @@ rows, the triple semantics are identical:
 
 from __future__ import annotations
 
-import json
 import re
 
-import pandas as pd
-
-from octofludb_spark.extract.emit import TripleSink
 from octofludb_spark.functions import dates as D
 from octofludb_spark.functions.geography import _country_code, _state_code, _tables
 from octofludb_spark.functions.uri import (
@@ -251,8 +247,8 @@ def record_triples(rec: dict, sink, only_influenza_a: bool = True):
 
 
 class _ScalarSink:
-    """Row-at-a-time adapter over TripleSink (GenBank records are
-    deeply nested JSON; the per-record loop is the unit of work)."""
+    """Row-at-a-time triple sink (GenBank records are deeply nested
+    JSON; the per-record loop is the unit of work)."""
 
     def __init__(self):
         self.rows: list[tuple] = []
@@ -260,29 +256,3 @@ class _ScalarSink:
     def add(self, s, p, o, dt=DT_PLAIN):
         if s is not None and p is not None and o is not None:
             self.rows.append((s, p, o, dt))
-
-    def frame(self) -> pd.DataFrame:
-        return pd.DataFrame(
-            self.rows, columns=["s", "p", "o", "dt"]
-        ).drop_duplicates(ignore_index=True)
-
-
-def genbank_triples(content: str, taguri=None) -> pd.DataFrame:
-    """lang='genbank': JSON-lines of Entrez-shaped record dicts.
-    (The reference's genbank path is untagged — prep_update_gb,
-    ui.py:745-766 — so taguri is accepted for interface parity and
-    ignored.)"""
-    del taguri
-    sink = _ScalarSink()
-    for line in content.splitlines():
-        line = line.strip()
-        if not line:
-            continue
-        try:
-            rec = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if not isinstance(rec, dict):
-            continue  # a malformed line must not kill the task
-        record_triples(rec, sink)
-    return sink.frame()

@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 
 from octofludb_spark.extract.emit import TypedColumn
+from octofludb_spark.functions import recognizers as R
 from octofludb_spark.functions.recognizers import (
     ALL_CLASSIFIERS,
     Recog,
@@ -43,23 +44,80 @@ def _na_mask(s: pd.Series, na_str: Sequence[str]) -> pd.Series:
     return mask
 
 
-def _goodness(recog: Recog, live: pd.Series, res: pd.DataFrame,
-              n_nonna: int) -> float:
-    """Match fraction (token.py:121-131); sequence tokens require
-    len>20 and divide by ALL cells (classifier_flucrew.py:433-444)."""
-    clean = res["clean"]
-    if recog.goodness_mode == "sequence":
-        if len(live) == 0:
-            return 0.0
-        ok = (
-            clean.notna()
-            & live.notna()
-            & (live.astype("object").fillna("").astype(str).str.len() > 20)
-        )
-        return float(ok.sum()) / len(live)
-    if n_nonna == 0:
-        return 0.0
-    return float((clean.notna() & live.notna()).sum()) / n_nonna
+def live_cells(values, na_str: Sequence[str] = ()) -> pd.Series:
+    """Cells as an object Series; NA cells (null, or listed in
+    ``na_str``) become None."""
+    s = pd.Series(list(values), dtype=object)
+    return s.where(~_na_mask(s, na_str), None)
+
+
+def infer_column(live: pd.Series, doc: np.ndarray, n_docs: int,
+                 classifiers: Optional[list[Recog]] = None):
+    """Column-level inference for every document of one concatenated
+    column (``doc`` = document index per cell).
+
+    Each recognizer runs ONCE over the whole column; a document's
+    goodness is its match fraction (token.py:121-131) — sequence
+    tokens require len>20 and divide by ALL the document's cells
+    (classifier_flucrew.py:433-444), others by its non-NA cells.  The
+    first recognizer with goodness > 0.8 wins per document
+    (HomoList.cast, classes.py:131-138).  Returns (chosen, results):
+    chosen[d] None means the default classifier; results maps
+    recognizer name -> its result over the whole column."""
+    live_np = live.notna().to_numpy()
+    chosen: list = [None] * n_docs
+    results: dict[str, dict] = {}
+    undecided = np.ones(n_docs, dtype=bool)
+    n_live = np.bincount(doc, weights=live_np, minlength=n_docs)
+    n_all = np.bincount(doc, minlength=n_docs)
+    long_np = None  # len>20 mask: only sequence-mode recogs need it
+    for recog in classifiers if classifiers is not None else ALL_CLASSIFIERS:
+        if not undecided.any():
+            break
+        res = R.run_unique(recog, live)
+        results[recog.name] = res
+        match_np = res["clean"].notna().to_numpy() & live_np
+        if recog.goodness_mode == "sequence":
+            if long_np is None:
+                long_np = (live.fillna("").astype(str).str.len()
+                           > 20).to_numpy()
+            match_np = match_np & long_np
+            denom = n_all
+        else:
+            denom = n_live
+        good = np.bincount(doc, weights=match_np, minlength=n_docs) \
+            / np.maximum(denom, 1)
+        good[denom == 0] = 0.0
+        win = undecided & (good > GOODNESS_THRESHOLD)
+        for d in np.flatnonzero(win):
+            chosen[d] = recog
+        undecided &= ~win
+    return chosen, results
+
+
+def typed_column(recog: Recog, live: pd.Series, field: Optional[str] = None,
+                 results: Optional[dict] = None,
+                 rows: Optional[np.ndarray] = None) -> TypedColumn:
+    """``recog`` applied to the live cells (only the ``rows`` mask,
+    when given), reusing its result from ``results`` when inference
+    already ran it."""
+    results = {} if results is None else results
+    if recog.name not in results:
+        results[recog.name] = R.run_unique(recog, live)
+    res = results[recog.name]
+    if rows is not None:
+        live = live[rows].reset_index(drop=True)
+        res = {k: v[rows].reset_index(drop=True) for k, v in res.items()}
+    clean = res["clean"].where(live.notna(), None)
+    dtype = res["dtype"].where(live.notna(), None) if "dtype" in res else None
+    return TypedColumn(recog=recog, dirty=live, clean=clean, field=field,
+                       dtype=dtype)
+
+
+def typed(recog: Recog, values, field: Optional[str] = None,
+          na_str: Sequence[str] = ()) -> TypedColumn:
+    """Apply one recognizer to a value list (no inference)."""
+    return typed_column(recog, live_cells(values, na_str), field)
 
 
 def type_column(
@@ -69,30 +127,12 @@ def type_column(
     na_str: Sequence[str] = (),
     default: Recog = UNKNOWN,
 ) -> TypedColumn:
-    """HomoList semantics: pick the first classifier with
-    goodness > 0.8, apply it to every cell.  Each recognizer runs
-    exactly once; the winner's result is reused."""
-    s = pd.Series(list(values), dtype=object)
-    na = _na_mask(s, na_str)
-    live = s.where(~na, None)
-    n_nonna = int((~na).sum())
-    chosen, chosen_res = default, None
-    for recog in classifiers if classifiers is not None else ALL_CLASSIFIERS:
-        res = recog.run(live)
-        if _goodness(recog, live, res, n_nonna) > GOODNESS_THRESHOLD:
-            chosen, chosen_res = recog, res
-            break
-    if chosen_res is None:
-        chosen_res = chosen.run(live)
-    return _from_result(chosen, live, chosen_res, field)
-
-
-def _from_result(recog: Recog, live: pd.Series, res: pd.DataFrame,
-                 field: Optional[str]) -> TypedColumn:
-    clean = res["clean"].where(live.notna(), None)
-    dtype = res["dtype"].where(live.notna(), None) if "dtype" in res else None
-    return TypedColumn(recog=recog, dirty=live, clean=clean, field=field,
-                       dtype=dtype)
+    """HomoList semantics for one column: the one-document case of
+    ``infer_column``; the winner (else ``default``) types every cell."""
+    live = live_cells(values, na_str)
+    (chosen,), results = infer_column(
+        live, np.zeros(len(live), dtype=np.int64), 1, classifiers)
+    return typed_column(chosen or default, live, field, results)
 
 
 def type_table(

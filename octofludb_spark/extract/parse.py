@@ -1,4 +1,4 @@
-"""Per-file text parsers: content string -> rows/columns of cells.
+"""Text parsers: one document's content string -> rows/columns of cells.
 
 Reproduces the observable behavior of the reference's parsers:
   - FASTA (reference: octofludb/classes.py:324-349): '>' headers split
@@ -7,9 +7,8 @@ Reproduces the observable behavior of the reference's parsers:
   - TSV (classes.py:270-290): first row is the header; cells stripped.
   - id lists (ui.py:600-619): one identifier per line.
 
-These run inside mapInPandas batches; each call handles ONE file's
-content (files are the parallelism unit — the per-file python loop is
-the applyInPandas idiom, not per-row UDF work).
+Each call handles ONE document; the recipes (extract/recipes.py)
+concatenate the parsed documents of a mapInPandas batch.
 """
 
 from __future__ import annotations

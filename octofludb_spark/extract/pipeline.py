@@ -53,10 +53,8 @@ def extract_triples(
     tag: Optional[str] = None,
     run_ts: Optional[str] = None,
 ) -> DataFrame:
-    """Stage 1: parse + recognize + emit, per file, map-side only."""
+    """Stage 1: parse + recognize + emit, map-side only."""
     taguri = make_tag_uri(tag) if tag else None
-
-    from octofludb_spark.extract.batched import BATCHED_RECIPES
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -75,7 +73,7 @@ def extract_triples(
             # per batch over all its files (pandas overhead amortizes)
             frames = []
             for lang, grp in pdf.groupby("lang", sort=False):
-                recipe = BATCHED_RECIPES.get(lang)
+                recipe = RECIPES.get(lang)
                 if recipe is None:
                     continue
                 items = list(zip(grp.index.to_numpy(), grp["content"]))

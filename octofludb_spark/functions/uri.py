@@ -118,8 +118,3 @@ def chksum_series(s: pd.Series) -> pd.Series:
             for x in s[mask]
         ]
     return out
-
-
-def pad_digit(x: str, n: int = 2) -> str:
-    """Zero-pad (reference: util.py:83-85)."""
-    return "0" * (n - len(x)) + x

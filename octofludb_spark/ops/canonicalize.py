@@ -12,6 +12,8 @@ exploded SALT ways so no single reducer owns a hub key (north_rule).
 
 from __future__ import annotations
 
+from typing import Optional
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,7 +62,7 @@ def canonical_rows(joined: DataFrame) -> DataFrame:
 
 
 def canonicalize(triples: DataFrame, mapping: DataFrame,
-                 use_broadcast: bool = True,
+                 use_broadcast: Optional[bool] = None,
                  auto_salt: bool = False) -> DataFrame:
     """Rewrite subject and URI-typed objects to canonical IRIs.
 
@@ -71,8 +73,9 @@ def canonicalize(triples: DataFrame, mapping: DataFrame,
     the same result.)  With the dictionary broadcast both dictionary
     joins keep the big side map-side.
 
-    With ``use_broadcast=False`` (the dictionary outgrew
-    BROADCAST_LIMIT) the two dictionary joins run as SALTED
+    ``use_broadcast=None`` decides by the dictionary's row count
+    (broadcast up to BROADCAST_LIMIT; a parquet count is metadata-only).
+    With ``use_broadcast=False`` the two dictionary joins run as SALTED
     repartition joins: canonical IRIs are hub keys by construction —
     every alias of H1N1 maps to the same canonical node — so a plain
     shuffled join would send one reducer the whole hub.  salted_join
@@ -87,6 +90,8 @@ def canonicalize(triples: DataFrame, mapping: DataFrame,
     wired into the treatment half.  A non-hub profile degrades to the
     plain repartition join (nsalt=1 would only add a constant salt
     column)."""
+    if use_broadcast is None:
+        use_broadcast = mapping.count() <= BROADCAST_LIMIT
     if use_broadcast:
         return canonical_rows(alias_join(triples, mapping))
     if auto_salt:

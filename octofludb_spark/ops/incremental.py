@@ -132,8 +132,7 @@ def sync_canonical(spark, store, batch: DataFrame,
     ``done``/``mark`` hook the store's stage markers for resumable
     batch updates (build.incremental_update); the CLI merge path runs
     without markers and relies on presence-check idempotence alone."""
-    from octofludb_spark.ops.canonicalize import (BROADCAST_LIMIT,
-                                                  canonicalize)
+    from octofludb_spark.ops.canonicalize import canonicalize
     from octofludb_spark.ops.cc import sameas_edges
     from octofludb_spark.sources.store import TRIPLE_KEY
 
@@ -165,10 +164,8 @@ def sync_canonical(spark, store, batch: DataFrame,
             mapping = old_map
         if not done("canon"):
             canon_batch = batch.select(*TRIPLE_KEY) if mapping is None \
-                else canonicalize(
-                    batch, mapping.select("node", "canonical"),
-                    use_broadcast=mapping.count() <= BROADCAST_LIMIT,
-                ).select(*TRIPLE_KEY)
+                else canonicalize(batch, mapping.select(
+                    "node", "canonical")).select(*TRIPLE_KEY)
             if sub_map is not None:
                 cur_c = store.read(spark, "triples_canonical")
                 if cur_c is not None:

@@ -63,8 +63,7 @@ def df_table_triples(df: DataFrame, segment_key: bool = False) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from octofludb_spark.extract.emit import TypedColumn, emit_table
-        from octofludb_spark.extract.infer import type_table
-        from octofludb_spark.extract.recipes import typed
+        from octofludb_spark.extract.infer import type_table, typed
         from octofludb_spark.functions import recognizers as R
 
         pdfs = [p for p in batches if len(p)]

@@ -46,16 +46,3 @@ def write_table_text(df: DataFrame, path: str) -> None:
         "\t", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
     )
     df.select(line.alias("value")).write.mode("overwrite").text(path)
-
-
-def write_fasta_text(df: DataFrame, path: str) -> None:
-    """Distributed FASTA writer: header|fields + newline + sequence,
-    built with JVM string expressions."""
-    cols = df.columns
-    head, seq = cols[:-1], cols[-1]
-    header = F.concat_ws(
-        "|", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in head]
-    )
-    rec = F.concat(F.lit(">"), header, F.lit("\n"),
-                   F.coalesce(F.col(seq).cast("string"), F.lit("")))
-    df.select(rec.alias("value")).write.mode("overwrite").text(path)

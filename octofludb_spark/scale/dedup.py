@@ -264,14 +264,6 @@ def containment_pairs(docs: DataFrame, threshold: float = 0.5,
     return fwd.unionByName(rev).where(F.col("containment") >= threshold)
 
 
-def minhash_signatures(docs: DataFrame, n_perm: int = N_PERM,
-                       max_df: int | None = None) -> DataFrame:
-    """(doc_id, sig: array<string>) — per-permutation minima of
-    md5(perm || '|' || shingle).  Hex-string min == numeric min for
-    equal-length lowercase hex."""
-    return _signatures(shingles(docs, max_df=max_df), n_perm)
-
-
 def _signatures(sh: DataFrame, n_perm: int = N_PERM) -> DataFrame:
     """All n_perm minima in ONE hash-agg shuffle: each permutation's
     hash is a projected column (map-side, codegen) and F.min gives the
@@ -571,16 +563,6 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
         ).otherwise(F.lit(0).cast("long"))
         fingerprint = fingerprint.bitwiseOR(term)
     return agg.select("doc_id", fingerprint.alias("simhash"))
-
-
-def simhash_dup_candidates(docs: DataFrame) -> DataFrame:
-    """Documents sharing a SimHash fingerprint (Hamming-0 buckets)."""
-    s = simhash(docs)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("canonical_doc_id"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 SIMHASH_BANDS = 4  # legacy 16-bit gate geometry: 4 bands of 4 bits

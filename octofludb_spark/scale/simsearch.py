@@ -134,14 +134,6 @@ def _bucket_bits(emb: DataFrame, n_planes: int, dim: int) -> DataFrame:
     )
 
 
-def lsh_bucket(emb: DataFrame, n_planes: int = 6, dim: int = 64) -> DataFrame:
-    """(vec_id, bucket): sign pattern across n random hyperplanes."""
-    b = _bucket_bits(emb, n_planes, dim)
-    return b.select("vec_id", F.concat_ws("", *[
-        F.element_at("bits", i + 1) for i in range(n_planes)
-    ]).alias("bucket"))
-
-
 def topk_lsh(emb: DataFrame, k: int = 5, n_planes: int | None = None,
              dim: int = 64, target_bucket: int = TARGET_BUCKET,
              multiprobe: bool = True) -> DataFrame:

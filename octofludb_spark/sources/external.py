@@ -132,7 +132,7 @@ def fetch_genbank_triples(
     ``attempts`` times with the reference's 15s backoff
     (entrez.py:132-143) before surfacing to Spark's task retry.
     Each record dict is emitted through the same recipe as the
-    genbank lang (extract/genbank.py), so network-fetched and
+    genbank lang (RECIPES["genbank"]), so network-fetched and
     file-loaded records produce identical triples."""
     schema = T.StructType([
         T.StructField("s", T.StringType()),
@@ -144,14 +144,14 @@ def fetch_genbank_triples(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import json
 
-        from octofludb_spark.extract.genbank import genbank_triples
+        from octofludb_spark.extract.recipes import file_triples
 
         for pdf in batches:
             for recs in fetch_batches(list(pdf["acc"]), fetch,
                                       batch_size=batch_size,
                                       attempts=attempts, sleep=sleep):
                 content = "\n".join(json.dumps(r) for r in recs)
-                out = genbank_triples(content)
+                out = file_triples("genbank", content)
                 if len(out):
                     yield out[["s", "p", "o", "dt"]]
 

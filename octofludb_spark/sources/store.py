@@ -403,14 +403,11 @@ class TripleStore:
         if table == "triples":
             cur_c = self.read(spark, "triples_canonical")
             if cur_c is not None:
-                from octofludb_spark.ops.canonicalize import (BROADCAST_LIMIT,
-                                                              canonicalize)
+                from octofludb_spark.ops.canonicalize import canonicalize
 
                 mapping = self.read(spark, "canonical_map")
                 cdels = dels if mapping is None else canonicalize(
-                    matched,
-                    mapping.select("node", "canonical"),
-                    use_broadcast=mapping.count() <= BROADCAST_LIMIT,
+                    matched, mapping.select("node", "canonical"),
                 ).select(*key3).dropDuplicates()
                 self.write(
                     cur_c.join(F.broadcast(cdels), key3, "left_anti"),

@@ -27,13 +27,7 @@ warnings.filterwarnings("ignore")
 from octofludb.classes import Ragged, Table  # noqa: E402
 from octofludb.recipes import mk_blast, mk_influenza_na, mk_ird  # noqa: E402
 
-from octofludb_spark.extract.recipes import (  # noqa: E402
-    blast_triples,
-    fasta_triples,
-    ird_triples,
-    ivr_triples,
-    table_triples,
-)
+from octofludb_spark.extract.recipes import RECIPES, file_triples  # noqa: E402
 from octofludb_spark.sources.synth import source_pandas  # noqa: E402
 
 
@@ -48,7 +42,7 @@ def my_triples(df):
 def _compare(content, lang):
     if lang == "fasta":
         ref = ref_triples(Ragged(content, na_str=[]).connect())
-        got = my_triples(fasta_triples(content))
+        got = my_triples(file_triples("fasta", content))
     elif lang == "tsv":
         try:
             ref = ref_triples(Table(content, na_str=[]).connect())
@@ -57,21 +51,21 @@ def _compare(content, lang):
             # (classes.py:275 rstrips the tabs away); our parser is
             # deliberately lenient there — nothing to compare
             return None
-        got = my_triples(table_triples(content))
+        got = my_triples(file_triples("tsv", content))
     elif lang == "blast":
         # newline=None == open(path, 'r'): the line recipes only ever
         # see files through click.File (universal newlines), so the
         # oracle models that path
         ref = ref_triples(mk_blast(io.StringIO(content, newline=None),
                                    tag=None))
-        got = my_triples(blast_triples(content))
+        got = my_triples(file_triples("blast", content))
     elif lang == "ivr":
         ref = ref_triples(mk_influenza_na(io.StringIO(content,
                                                       newline=None)))
-        got = my_triples(ivr_triples(content))
+        got = my_triples(file_triples("ivr", content))
     elif lang == "ird":
         ref = ref_triples(mk_ird(io.StringIO(content, newline=None)))
-        got = my_triples(ird_triples(content))
+        got = my_triples(file_triples("ird", content))
     else:
         return None
     assert got == ref, (lang, sorted(got ^ ref)[:6])
@@ -168,12 +162,10 @@ def test_fuzzed_mixed_goodness_tables_match_reference_pipeline():
 
 
 def test_fuzzed_tables_batched_equals_per_file():
-    """The batched tabular path (signature-grouped emission) must
-    equal the per-file recipe on the same fuzzed tables — batching is
-    an execution strategy, never a semantics change."""
+    """One batch of fuzzed tables (signature-grouped emission) must
+    equal one-document batches of the same tables — batching is an
+    execution strategy, never a semantics change."""
     import numpy as np
-
-    from octofludb_spark.extract.batched import table_triples_batched
 
     rnd = random.Random(19)
     headers = ["seqid", "clade", "strain_name", "subtype", "host",
@@ -190,12 +182,12 @@ def test_fuzzed_tables_batched_equals_per_file():
             lines.append("\t".join(rnd.choice(cells) for _ in cols))
         docs.append("\n".join(lines))
 
-    batched = table_triples_batched(list(enumerate(docs)))
+    batched = RECIPES["tsv"](list(enumerate(docs)))
     got_by_src = {}
     for r in batched.itertuples(index=False):
         got_by_src.setdefault(int(r.src), set()).add((r.s, r.p, r.o))
     for i, doc in enumerate(docs):
-        per_file = my_triples(table_triples(doc))
+        per_file = my_triples(file_triples("tsv", doc))
         assert got_by_src.get(i, set()) == per_file, f"doc {i}"
 
 
@@ -232,7 +224,7 @@ def test_fasta_grammar_fuzz_vs_reference():
             # the reference grammar itself rejects this document —
             # nothing to compare (many1/alt backtracking limits)
             continue
-        got = my_triples(fasta_triples(content))
+        got = my_triples(file_triples("fasta", content))
         assert got == ref, (content, sorted(got ^ ref)[:6])
         checked += 1
     assert checked >= 300  # the grammar accepts nearly everything
@@ -367,7 +359,7 @@ def test_ird_newline_terminated_strain_rejected():
     for suffix in ("\n", "\r\n"):
         n = _compare(line + suffix, "ird")       # parity, strain dropped
         assert n < full
-        got = my_triples(ird_triples(line + suffix))
+        got = my_triples(file_triples("ird", line + suffix))
         assert not any("texas" in s for s, _, _ in got)
 
 
@@ -382,7 +374,7 @@ def test_gisaid_columns_fuzz_vs_reference():
     import octofludb.recipes as ref_recipes
     import pandas as _pd
 
-    from octofludb_spark.extract.recipes import gisaid_triples_columns
+    from octofludb_spark.extract.recipes import gisaid_column_triples
 
     rng = random.Random(5150)
     segs = ("PB2", "PB1", "PA", "HA", "NP", "NA", "MP", "NS")
@@ -414,7 +406,7 @@ def test_gisaid_columns_fuzz_vs_reference():
             fdf = _pd.DataFrame(d)
             ref_recipes.pd.read_excel = lambda *a, **k: fdf
             ref = ref_triples(ref_recipes.mk_gis("fake.xls"))
-            got = my_triples(gisaid_triples_columns(d))
+            got = my_triples(gisaid_column_triples([(0, d)]))
             assert got == ref, sorted(got ^ ref)[:6]
     finally:
         ref_recipes.pd.read_excel = orig
@@ -471,7 +463,7 @@ def test_levels_and_na_str_fuzz_vs_reference():
             ref = ref_triples(
                 Ragged(doc, levels=levels, na_str=list(na)).connect())
             got = my_triples(
-                fasta_triples(doc, levels=levels, na_str=tuple(na)))
+                file_triples("fasta", doc, levels=levels, na_str=tuple(na)))
         else:
             cols = rng.sample(headers, 2 + rng.randrange(3))
             lines = ["\t".join(cols)]
@@ -484,7 +476,7 @@ def test_levels_and_na_str_fuzz_vs_reference():
             except IndexError:
                 continue
             got = my_triples(
-                table_triples(doc, levels=levels, na_str=tuple(na)))
+                file_triples("tsv", doc, levels=levels, na_str=tuple(na)))
         assert got == ref, (doc, levels, na, sorted(got ^ ref)[:6])
         checked += 1
     assert checked >= 100
@@ -538,7 +530,7 @@ def test_include_exclude_fuzz_vs_reference():
                     # reference itself crashes; nothing to compare
                     continue
                 got = my_triples(
-                    fasta_triples(doc, classifiers=chain(inc, exc)))
+                    file_triples("fasta", doc, classifiers=chain(inc, exc)))
             else:
                 cols = rng.sample(headers, 2 + rng.randrange(3))
                 lines = ["\t".join(cols)]
@@ -553,7 +545,7 @@ def test_include_exclude_fuzz_vs_reference():
                 except (IndexError, KeyError):
                     continue
                 got = my_triples(
-                    table_triples(doc, classifiers=chain(inc, exc)))
+                    file_triples("tsv", doc, classifiers=chain(inc, exc)))
             assert got == ref, (doc, inc, exc, sorted(got ^ ref)[:6])
             checked += 1
     finally:

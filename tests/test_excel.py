@@ -22,10 +22,11 @@ needs_fixture = pytest.mark.skipif(
 def test_gisaid_xls_full_golden_parity():
     """EXACT triple-set equality with the reference CI golden over the
     ENTIRE real gisaid.xls (224 triples, every isolate)."""
-    from octofludb_spark.extract.recipes import gisaid_triples_excel
+    from octofludb_spark.extract.recipes import file_triples
     from octofludb_spark.plans.turtle import parse_turtle
 
-    df = gisaid_triples_excel(open(XLS, "rb").read())
+    df = file_triples("gisaid_xls",
+                      base64.b64encode(open(XLS, "rb").read()).decode())
     got = {(r.s, r.p, r.o) for r in df.itertuples(index=False)}
     want = set(parse_turtle(open(GOLDEN).read()))
     assert got == want
@@ -51,8 +52,7 @@ def test_xls_cell_grid():
 def test_xlsx_roundtrip_and_recipe_parity():
     """write_xlsx -> parse_xlsx round-trips, and the gisaid recipe
     produces identical triples from xlsx bytes and TSV text."""
-    from octofludb_spark.extract.recipes import (gisaid_triples,
-                                                 gisaid_triples_excel)
+    from octofludb_spark.extract.recipes import file_triples
     from octofludb_spark.extract.xls import parse_xlsx, write_xlsx
 
     head = ["Isolate_Id", "Isolate_Name", "Host", "Subtype", "Lineage",
@@ -64,8 +64,8 @@ def test_xlsx_roundtrip_and_recipe_parity():
     xlsx = write_xlsx([head, row])
     assert parse_xlsx(xlsx) == [head, row]
     tsv = "\t".join(head) + "\n" + "\t".join(row)
-    a = gisaid_triples_excel(xlsx)
-    b = gisaid_triples(tsv)
+    a = file_triples("gisaid_xls", base64.b64encode(xlsx).decode())
+    b = file_triples("gisaid", tsv)
     assert {tuple(r) for r in a.itertuples(index=False)} == \
            {tuple(r) for r in b.itertuples(index=False)}
     assert len(a) > 0

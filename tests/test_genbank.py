@@ -2,7 +2,7 @@
 
 import json
 
-from octofludb_spark.extract.genbank import genbank_triples
+from octofludb_spark.extract.recipes import file_triples
 
 FID = "https://flu-crew.org/id/"
 FT = "https://flu-crew.org/term/"
@@ -46,7 +46,7 @@ RECORD = {
 
 
 def _trips(content):
-    df = genbank_triples(content)
+    df = file_triples("genbank", content)
     return {(r.s, r.p, r.o, r.dt) for r in df.itertuples(index=False)}
 
 
@@ -102,7 +102,7 @@ def test_genbank_unknown_country_fallback():
 
 
 def test_genbank_fuzz_vs_reference():
-    """genbank_triples fuzz-compared against the reference's own
+    """The genbank recipe fuzz-compared against the reference's own
     make_gb_meta_triples (genbank.py:37-187) over synthetic Entrez
     records: influenza-A organism gate, per-record uid feature nodes,
     qualifier routing (strain parse fallback, country ':'-prefix
@@ -171,7 +171,8 @@ def test_genbank_fuzz_vs_reference():
             ref, _err = make_gb_meta_triples(rec)
         ref = {(str(s), str(p), str(o)) for s, p, o in ref}
         got = {(r.s, r.p, r.o) for r in
-               genbank_triples(json.dumps(rec)).itertuples(index=False)}
+               file_triples("genbank", json.dumps(rec))
+               .itertuples(index=False)}
         assert got == ref, (rec, sorted(got ^ ref)[:6])
         compared += 1
     assert compared == 400

@@ -3,10 +3,7 @@ forced segment keys in tables (reference recipes.py:510-573)."""
 
 import pytest
 
-from octofludb_spark.extract.recipes import (
-    irregular_fasta_triples,
-    irregular_segment_table_triples,
-)
+from octofludb_spark.extract.recipes import file_triples
 
 pytestmark = pytest.mark.core
 
@@ -22,7 +19,7 @@ def _trips(df):
 def test_irregular_fasta():
     # idiosyncratic id 'pig1' is forced to be a strain
     seq = "GATACAGATACAGATACAGATACAGATACA"
-    out = _trips(irregular_fasta_triples(f">pig1|H1N1\n{seq}\n"))
+    out = _trips(file_triples("unpublished", f">pig1|H1N1\n{seq}\n"))
     import hashlib
 
     md5 = hashlib.md5(seq.encode()).hexdigest()
@@ -35,7 +32,7 @@ def test_irregular_fasta():
 
 def test_irregular_segment_table():
     content = "myseg\tclade\nweird-id-7\talpha\n"
-    out = _trips(irregular_segment_table_triples(content))
+    out = _trips(file_triples("segtable", content))
     seg = FID + "weird_id_7"  # make_uri collapses '-' to '_'
     # attribute attaches to the forced segment; the segment itself
     # asserts no typename predicate (typename None)
@@ -59,11 +56,6 @@ def test_irregular_fuzz_vs_reference():
     sys.path.insert(1, "/root/reference")
     warnings.filterwarnings("ignore")
     from octofludb.recipes import IrregularFasta, IrregularSegmentTable
-
-    from octofludb_spark.extract.recipes import (
-        irregular_fasta_triples,
-        irregular_segment_table_triples,
-    )
 
     def ref_triples(g):
         return {(str(s), str(p), str(o)) for s, p, o in g}
@@ -92,7 +84,7 @@ def test_irregular_fuzz_vs_reference():
                 ref = ref_triples(IrregularFasta(doc, na_str=[]).connect())
             except BaseException:
                 continue
-            got = my_triples(irregular_fasta_triples(doc))
+            got = my_triples(file_triples("unpublished", doc))
         else:
             ncol = 2 + rng.randrange(3)
             cols = ["segid"] + [rng.choice(headers)
@@ -108,7 +100,7 @@ def test_irregular_fuzz_vs_reference():
                     IrregularSegmentTable(doc, na_str=[]).connect())
             except BaseException:
                 continue
-            got = my_triples(irregular_segment_table_triples(doc))
+            got = my_triples(file_triples("segtable", doc))
         assert got == ref, (doc, sorted(got ^ ref)[:6])
         checked += 1
     assert checked >= 80

@@ -12,7 +12,7 @@ import os
 
 import pytest
 
-from octofludb_spark.extract.recipes import gisaid_triples
+from octofludb_spark.extract.recipes import file_triples
 from octofludb_spark.plans.turtle import parse_turtle, triples_to_turtle
 
 pytestmark = pytest.mark.core
@@ -41,7 +41,7 @@ def _vnm_row_content() -> str:
 
 @pytest.mark.skipif(not os.path.exists(GOLDEN), reason="golden not present")
 def test_gisaid_golden_triple_set():
-    got_df = gisaid_triples(_vnm_row_content())
+    got_df = file_triples("gisaid", _vnm_row_content())
     got = {(r.s, r.p, r.o) for r in got_df.itertuples(index=False)}
 
     golden = parse_turtle(open(GOLDEN).read())
@@ -54,7 +54,7 @@ def test_gisaid_golden_triple_set():
 
 
 def test_turtle_roundtrip():
-    df = gisaid_triples(_vnm_row_content()).rename(
+    df = file_triples("gisaid", _vnm_row_content()).rename(
         columns={"s": "subject", "p": "predicate", "o": "object_lex",
                  "dt": "object_dtype"}
     )

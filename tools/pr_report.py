@@ -5,7 +5,10 @@ Golden (s, p, o) sets are transcribed from the reference's own suite
 (runtests.py:537-554, 640-661, 664-757) and its checked-in end-to-end
 output (test-data/.exp-gisaid.ttl) — the same fixtures the pytest
 suite asserts exact equality on; this tool aggregates them into the
-single micro-averaged P/R number and writes PR.md."""
+single micro-averaged P/R number and prints a markdown table to stdout
+(it writes no file).
+
+    python3 tools/pr_report.py"""
 
 from __future__ import annotations
 
@@ -16,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd
 
-from octofludb_spark.extract.recipes import RECIPES
+from octofludb_spark.extract.recipes import file_triples
 
 FID = "https://flu-crew.org/id/"
 FT = "https://flu-crew.org/term/"
@@ -104,7 +107,7 @@ def live_reference_corpus():
             else:
                 continue
             want = {(str(s), str(p), str(o)) for s, p, o in ref}
-            got_df = RECIPES[row.lang](row.content, taguri=None)
+            got_df = file_triples(row.lang, row.content)
             got = {(r.s, r.p, r.o) for r in got_df.itertuples(index=False)}
             tp += len(got & want)
             fp += len(got - want)
@@ -118,7 +121,7 @@ def main() -> None:
     tp = fp = fn = 0
     rows = []
     for name, lang, content, golden in CASES:
-        got_df = RECIPES[lang](content, taguri=None)
+        got_df = file_triples(lang, content)
         got = {(r.s, r.p, r.o) for r in got_df.itertuples(index=False)}
         if golden is None:
             continue
@@ -134,20 +137,19 @@ def main() -> None:
     live = None
     if os.path.isdir("/root/reference"):
         live = live_reference_corpus()
-    with open(os.path.join(os.path.dirname(__file__), "..", "PR.md"), "w") as f:
-        f.write("# PR — triple-level precision/recall vs the reference\n\n")
-        f.write("## Transcribed goldens (reference test suite + checked-in "
-                "gisaid turtle)\n\n")
-        f.write("| case | golden triples | precision | recall |\n|---|---|---|---|\n")
-        for name, n, p, r in rows:
-            f.write(f"| {name} | {n} | {p:.3f} | {r:.3f} |\n")
-        f.write(f"\n**Micro-averaged: precision {precision:.3f}, "
-                f"recall {recall:.3f}** (gate: >= 0.95)\n")
-        if live:
-            docs, ltp, lfp, lfn = live
-            lp = ltp / max(ltp + lfp, 1)
-            lr = ltp / max(ltp + lfn, 1)
-            f.write(f"""
+    print("# PR — triple-level precision/recall vs the reference\n")
+    print("## Transcribed goldens (reference test suite + checked-in "
+          "gisaid turtle)\n")
+    print("| case | golden triples | precision | recall |\n|---|---|---|---|")
+    for name, n, p, r in rows:
+        print(f"| {name} | {n} | {p:.3f} | {r:.3f} |")
+    print(f"\n**Micro-averaged: precision {precision:.3f}, "
+          f"recall {recall:.3f}** (gate: >= 0.95)")
+    if live:
+        docs, ltp, lfp, lfn = live
+        lp = ltp / max(ltp + lfp, 1)
+        lr = ltp / max(ltp + lfn, 1)
+        print(f"""
 ## Live reference oracle (reference pipeline executed via tests/refshim)
 
 The reference's own Ragged/Table/mk_blast/mk_influenza_na ingestion
@@ -157,8 +159,6 @@ recipes' triple sets were compared exactly.
 **{ltp + lfn:,} oracle triples: precision {lp:.4f}, recall {lr:.4f}**
 (tp={ltp:,} fp={lfp} fn={lfn})
 """)
-            print(f"live oracle: docs={docs} tp={ltp} fp={lfp} fn={lfn} "
-                  f"p={lp:.4f} r={lr:.4f}")
     print(f"transcribed: precision={precision:.3f} recall={recall:.3f} "
           f"(tp={tp} fp={fp} fn={fn})")
 
